@@ -266,66 +266,38 @@ def _build_window(
         segment, t_start, t_end, block, reach_fwd, reach_bwd
     )
 
-    # SQL-text fast path (r09): a scale-domain query builds dozens of
-    # frame columns and per-lx structs; assembling them through the
-    # Column API measured ~4,000 py4j round trips (~1.8 s of pure
-    # driver time per build at 36 offsets). When every measure
-    # provides its w_expr as SQL text, the whole projection parses
-    # JVM-side in two calls and resolves to the identical plan.
-    sql_ok = all(
-        mdef.w_expr_sql(l0, args) is not None
-        for mdef, args in measures.values()
-    )
-
+    # The projection is SQL text (r09): a scale-domain query builds
+    # dozens of frame columns and per-lx structs; assembling them
+    # through the Column API measured ~4,000 py4j round trips (~1.8 s
+    # of pure driver time per build at 36 offsets), while the text
+    # parses JVM-side in two calls.
     # deduplicated base frame columns across measures and lx values
-    frame_cols: dict[str, object] = {}
-    w = None if sql_ok else Window.partitionBy("wpid").orderBy("time_id")
+    frame_cols: dict[str, str] = {}
     for lx in range(l0, l1 + 1):
         for mdef, args in measures.values():
             for fr in mdef.w_frames(lx, args):
                 if fr.name not in frame_cols:
-                    frame_cols[fr.name] = fr.sql() if sql_ok else fr.column(w)
+                    frame_cols[fr.name] = fr.sql()
 
-    if sql_ok:
-        computed = seg2.selectExpr(
-            "wpid",
-            "time_id",
-            *[f"{sql} AS {n}" for n, sql in frame_cols.items()],
-        )
-    else:
-        computed = seg2.select(
-            "wpid",
-            "time_id",
-            *[c.alias(n) for n, c in frame_cols.items()],
-        )
+    computed = seg2.selectExpr(
+        "wpid",
+        "time_id",
+        *[f"{sql} AS {n}" for n, sql in frame_cols.items()],
+    )
     # drop halo evaluation rows; keep candidate starts only
     computed = computed.where(
         (F.col("wpid") == true_pid) & F.col("time_id").between(x0, x1)
     )
 
-    if sql_ok:
-        struct_sqls = []
-        for lx in range(l0, l1 + 1):
-            fields = [f"CAST({lx} AS INT) AS lx"]
-            for col_name, (mdef, args) in measures.items():
-                fields.append(
-                    f"CAST({mdef.w_expr_sql(lx, args)} AS DOUBLE)"
-                    f" AS {col_name}"
-                )
-            struct_sqls.append("struct(" + ", ".join(fields) + ")")
-        exploded = F.explode(
-            F.expr("array(" + ", ".join(struct_sqls) + ")")
-        )
-    else:
-        structs = []
-        for lx in range(l0, l1 + 1):
-            fields = [F.lit(lx).cast("int").alias("lx")]
-            for col_name, (mdef, args) in measures.items():
-                fields.append(
-                    mdef.w_expr(lx, args).cast("double").alias(col_name)
-                )
-            structs.append(F.struct(*fields))
-        exploded = F.explode(F.array(*structs))
+    struct_sqls = []
+    for lx in range(l0, l1 + 1):
+        fields = [f"CAST({lx} AS INT) AS lx"]
+        for col_name, (mdef, args) in measures.items():
+            fields.append(
+                f"CAST({mdef.w_expr_sql(lx, args)} AS DOUBLE) AS {col_name}"
+            )
+        struct_sqls.append("struct(" + ", ".join(fields) + ")")
+    exploded = F.explode(F.expr("array(" + ", ".join(struct_sqls) + ")"))
 
     out = computed.select(
         F.col("time_id").alias("x"), exploded.alias("c")

@@ -55,13 +55,6 @@ SIMHASH_BITS = 32
 SIMHASH_BANDS = 4  # 8 bits per band; hamming<=3 => >=1 band equal
 SIMHASH_MOD = 1 << SIMHASH_BITS
 
-# broadcast the per-round label frame in neardup_components while the
-# node set fits a comfortable broadcast (~16 B/row → ~160 MB at the
-# bound) — the components-loop analogue of graph.PR_BROADCAST_MAX_NODES
-# (same rationale, same measured-switch convention); beyond it the
-# labels shuffle (plain equi-join)
-CC_BROADCAST_MAX_NODES = 10_000_000
-
 
 def _release_with(result: DataFrame, *cached: DataFrame) -> DataFrame:
     """Tie the lifetime of internally ``persist()``-ed frames to the
@@ -851,10 +844,10 @@ def neardup_components(
         F.sum("label").alias("s"), F.count(F.lit(1)).alias("n")
     ).first()
     prev_sum = first["s"]
-    # r09 (guide §3.1, same measured-switch convention as
-    # graph.PR_BROADCAST_MAX_NODES): the per-round join shuffles the
-    # EDGE table against a node-sized label frame; while the labels
-    # fit a comfortable broadcast (~16 B/row), broadcasting them keeps
+    # r09 (guide §3.1): the per-round join shuffles the EDGE table
+    # against a node-sized label frame; while the labels fit a
+    # broadcast (broadcast_ok: rows x schema width within
+    # BROADCAST_MAX_BYTES, see materialize.py), broadcasting them keeps
     # the edges out of every round's join exchange — the groupBy(a)
     # then ships only partial mins. Same-session A/B at sf0.1 (2.7M
     # edges / 5k nodes): 12.3 → 7.6 s and 7.9 → 6.7 s noop. Beyond the
@@ -1105,7 +1098,6 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
     max_posting: int | None = None,
-    cap_strategy: str = "window",
     shingle_rows: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram (shingle-set) Jaccard similarity for all pairs
@@ -1120,38 +1112,23 @@ def ngram_jaccard_pairs(
     corpus scale (SCALE.md). Scores then UNDER-estimate (intersections
     lose capped shingles while union sizes keep them), so capped runs
     trade exactness for a bounded shuffle — the MinHash path is the
-    calibrated approximation.
-
-    ``cap_strategy`` picks how the document frequency is computed:
-    ``"window"`` (default) counts and filters in the SAME shuffle that
-    the self-join needs (one exchange on the shingle, ~2x faster,
-    measured at sf0.1); ``"join"`` uses a map-side-combinable
-    groupBy + equi-join — one extra shuffle, but AQE can split a
-    pathologically skewed stop-shingle's partitions there, so prefer
-    it when a mega-shingle would straggle the window task."""
-    if cap_strategy not in ("window", "join"):
-        raise ValueError("cap_strategy must be 'window' or 'join'")
+    calibrated approximation. The document frequency is a window
+    count over the shingle, so counting and filtering run in the SAME
+    shuffle the self-join needs (one exchange on the shingle; ~2x
+    faster than a groupBy + equi-join, measured at sf0.1)."""
     # shingle_rows: precomputed (persisted) shingle frame, so an
     # adaptive caller pays the tokenize+distinct stage ONCE for
     # advisor + join (mirrors minhash_lsh_pairs' sig_wide seam)
     sh = (
         shingle_rows if shingle_rows is not None else shingles(docs).persist()
     )
-    if max_posting is not None and cap_strategy == "window":
+    if max_posting is not None:
         w = Window.partitionBy("s")
         joined_sh = (
             sh.withColumn("_df", F.count("*").over(w))
             .where(F.col("_df") <= max_posting)
             .drop("_df")
         )
-    elif max_posting is not None:
-        rare = (
-            sh.groupBy("s")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") <= max_posting)
-            .select("s")
-        )
-        joined_sh = sh.join(rare, "s").persist()
     else:
         joined_sh = sh
 
@@ -1304,10 +1281,7 @@ def ngram_jaccard_pairs_advised(
     adv = posting_advisor(docs, shingle_rows=sh).collect()[0]
     cap = int(adv["recommended_cap"]) if adv["cap_recommended"] else None
     return _release_with(
-        ngram_jaccard_pairs(
-            docs, threshold, max_posting=cap, cap_strategy="window",
-            shingle_rows=sh,
-        ),
+        ngram_jaccard_pairs(docs, threshold, max_posting=cap, shingle_rows=sh),
         sh,
     )
 

@@ -43,11 +43,6 @@ from query_refinement_dsit_databases_2021_spark.operators.materialize import (
 INIT_MASS = 1_000_000_000
 TELEPORT = 150_000_000  # floor(0.15 * INIT_MASS)
 PR_ITERATIONS = 5
-# broadcast the per-iteration send frame while the node set fits a
-# comfortable broadcast (≈16 B/row → ~160 MB at the bound); measured
-# 1.65× at 100M edges / 10M nodes, no regression at smaller sizes
-# (graph_scale.csv, BASELINE.md round 7)
-PR_BROADCAST_MAX_NODES = 10_000_000
 
 
 def pagerank(
@@ -83,11 +78,12 @@ def pagerank(
     `F.broadcast(send)` keeps the EDGE table out of every
     per-iteration shuffle — at 100M edges / 10M nodes that measured
     309 s → 187 s (1.65×, quiet box; ties at ≤30M edges where the
-    shuffle is cheap anyway). ``broadcast_send=None`` probes once
-    (`nodes.count()`) and broadcasts ≤ ``PR_BROADCAST_MAX_NODES``
-    (~160 MB send frame, comfortably inside executor memory), plain
-    equi-join beyond it (a billion-node graph must shuffle — a blind
-    broadcast would OOM the executors). The probe is itself a job (it
+    shuffle is cheap anyway). ``broadcast_send=None`` probes the node
+    count once and broadcasts while :func:`materialize.broadcast_ok`
+    holds (rows x schema width ≤ ``BROADCAST_MAX_BYTES``, 160 MB —
+    comfortably inside executor memory), no broadcast beyond it (a
+    billion-node graph must shuffle — a blind broadcast would OOM the
+    executors). The probe is itself a job (it
     re-runs the edge derivation), and the r07 interleaved A/B caught
     it costing +1.4 s on the dim-sized sf0.1 trade graph, then caught
     broadcast itself costing ~10% there (five per-iteration broadcast
@@ -242,7 +238,7 @@ def hits(
     the caller knows the node scale (the workload passes False — its
     trade graph is dim-sized, where pagerank measured broadcast builds
     as a ~10% loss); None probes `nodes.count()` once and broadcasts
-    ≤ ``PR_BROADCAST_MAX_NODES``.
+    while ``broadcast_ok`` holds (≤ ``BROADCAST_MAX_BYTES``).
 
     Returns ``(node, authority, hub)`` for every node.
     """
@@ -350,14 +346,17 @@ def harmonic_centrality_sampled(
     must agree on "no row" (advice r06: latent divergence on sparse
     graphs; benign on the dense trade graph but pinned by test now).
     """
-    # ONE multi-source BFS loop for all seeds (r09, guide §1.2): the
-    # previous per-seed loop ran |seeds| sequential BFS convergence
-    # loops — rounds × 2 eager jobs each (measured 17 s at sf0.1 for 4
-    # seeds); keying the frontier by (seed, node) runs them together
-    # for one loop of max-diameter rounds. Per-seed distances — and
-    # the no-row contract for seeds that reach nothing — are identical
-    # (GROUP BY seed over the dist > 0 frontier).
-    d = _bfs_distances_multi(edges, seeds)
+    # ONE BFS loop for all seeds (r09, guide §1.2): the previous
+    # per-seed loop ran |seeds| sequential BFS convergence loops —
+    # rounds × 2 eager jobs each (measured 17 s at sf0.1 for 4 seeds);
+    # keying the sources by seed runs them together for one loop of
+    # max-diameter rounds. Per-seed distances — and the no-row
+    # contract for seeds that reach nothing — are identical (GROUP BY
+    # seed over the dist > 0 frontier).
+    sources = edges.sparkSession.createDataFrame(
+        [(int(s), int(s)) for s in seeds], "seed long, node long"
+    )
+    d = bfs_distances(edges, sources)
     return (
         d.where((F.col("dist") > 0) & (F.col("dist") <= max_dist))
         .groupBy("seed")
@@ -573,7 +572,6 @@ def triangle_count(
             tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
             .groupBy("node")
             .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-            .where(F.col("n_triangles") > 0)
         )
     da = deg.select(F.col("n").alias("a"), F.col("d").alias("da"))
     db = deg.select(F.col("n").alias("b"), F.col("d").alias("db"))
@@ -956,6 +954,15 @@ def bfs_distances(
     Returns ``(node, dist)`` for every REACHED node; unreached nodes
     are absent by contract.
 
+    Every ``sources`` column other than ``node`` is a KEY: each key
+    value runs its own BFS from its own source rows, all in ONE loop
+    keyed by ``(key..., node)`` (r09, guide §1.2 — the harmonic
+    workload used to run one full loop of rounds × 2 eager jobs per
+    seed). The result is then ``(key..., node, dist)``. Distances are
+    identical to one BFS per key: min-plus updates are independent per
+    key, and the global ``(count, sum)`` fixpoint is reached exactly
+    when every per-key fixpoint is (updates are monotone per key).
+
     r10 canonicalize-then-explode (guide §2.3 — shuffle fewer bytes):
     the symmetric closure used to explode BOTH directions and then
     ``distinct`` — an exchange and a checkpoint of 2m rows. The
@@ -989,27 +996,33 @@ def bfs_distances(
     )
     if sources is None:
         sources = canon.agg(F.min("a").alias("node"))
+    keys = [c for c in sources.columns if c != "node"]
     dist = sources.select(
-        F.col("node"), F.lit(0).cast("long").alias("dist")
+        *keys, "node", F.lit(0).cast("long").alias("dist")
     ).localCheckpoint(eager=False)
     prev = (dist.count(), 0)
     for _ in range(max_iters + 1):
         # broadcast the frontier while it fits (r09; r10: BYTE-based
         # bound — rows x schema width vs BROADCAST_MAX_BYTES, see
-        # materialize.broadcast_ok): the reached-set size is already
-        # tracked by the convergence tuple, so the per-round decision
-        # is free; beyond the bound the plain equi-join shuffles as
-        # before. The checkpoint is LAZY (r10): the probe aggregate
-        # below materializes the round's state in the SAME job — one
-        # job per round instead of checkpoint + probe.
+        # materialize.broadcast_ok, so a keyed frontier's wider row is
+        # priced in): the reached-set size is already tracked by the
+        # convergence tuple, so the per-round decision is free; beyond
+        # the bound the plain equi-join shuffles as before. The
+        # checkpoint is LAZY (r10): the probe aggregate below
+        # materializes the round's state in the SAME job — one job per
+        # round instead of checkpoint + probe.
         hint = F.broadcast if broadcast_ok(prev[0], dist) else (
             lambda df: df
         )
         stepped = (
             und.join(hint(dist), und.src == dist.node)
-            .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-            .unionByName(dist.select("node", "dist"))
-            .groupBy("node")
+            .select(
+                *keys,
+                F.col("dst").alias("node"),
+                (F.col("dist") + 1).alias("dist"),
+            )
+            .unionByName(dist.select(*keys, "node", "dist"))
+            .groupBy(*keys, "node")
             .agg(F.min("dist").alias("dist"))
             .localCheckpoint(eager=False)
         )
@@ -1022,83 +1035,6 @@ def bfs_distances(
             return dist
         prev = cur
     raise RuntimeError(f"bfs_distances did not converge in {max_iters} rounds")
-
-
-def _bfs_distances_multi(
-    edges: DataFrame, seeds, max_iters: int = 50
-) -> DataFrame:
-    """Multi-source :func:`bfs_distances`: ONE min-plus loop keyed by
-    ``(seed, node)`` instead of one full BFS loop per seed (r09, guide
-    §1.2 — per-seed loops cost rounds × 2 eager jobs EACH; the
-    harmonic workload ran 4 of them sequentially). Distances are
-    identical to per-seed BFS: min-plus updates are independent per
-    seed key, and the global ``(count, sum)`` fixpoint is reached
-    exactly when every per-seed fixpoint is (updates are monotone per
-    key). Returns ``(seed, node, dist)`` for reached pairs.
-
-    ``seeds``: iterable of node ids (plan-time literals, like the
-    sampled-seed contract of :func:`harmonic_centrality_sampled`).
-    """
-    spark = edges.sparkSession
-    # canonicalize-then-explode (r10, same rationale and identical-
-    # result argument as :func:`bfs_distances`): distinct + checkpoint
-    # on m canonical rows, the symmetric explode map-side in the loop
-    canon = materialize(
-        edges.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        ).distinct()
-    )
-    und = (
-        canon.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("a").alias("src"), F.col("b").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("b").alias("src"), F.col("a").alias("dst")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select(F.col("e.src").alias("src"), F.col("e.dst").alias("dst"))
-    )
-    dist = spark.createDataFrame(
-        [(int(s), int(s), 0) for s in seeds], "seed long, node long, dist long"
-    ).localCheckpoint()
-    prev = (dist.count(), 0)
-    for _ in range(max_iters + 1):
-        # same frontier broadcast switch as :func:`bfs_distances` —
-        # the (seed, node) frontier count rides the convergence tuple,
-        # and the byte bound prices the WIDER (seed, node, dist) row;
-        # lazy checkpoint: the probe materializes the round (r10)
-        hint = F.broadcast if broadcast_ok(prev[0], dist) else (
-            lambda df: df
-        )
-        stepped = (
-            und.join(hint(dist), und.src == dist.node)
-            .select(
-                "seed",
-                F.col("dst").alias("node"),
-                (F.col("dist") + 1).alias("dist"),
-            )
-            .unionByName(dist.select("seed", "node", "dist"))
-            .groupBy("seed", "node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        agg = stepped.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")
-        ).first()
-        cur = (agg["n"], agg["s"])
-        dist = stepped
-        if cur == prev:
-            return dist
-        prev = cur
-    raise RuntimeError(
-        f"_bfs_distances_multi did not converge in {max_iters} rounds"
-    )
 
 
 def _wl_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1855,7 +1791,8 @@ def label_propagation(
     groupBy(n, label) shuffle after the join still runs either way.
     Same contract: True/False when the caller knows the node scale
     (the workload passes False — dim-sized co-purchase graph), None
-    probes once and broadcasts ≤ ``PR_BROADCAST_MAX_NODES``.
+    probes once and broadcasts while ``broadcast_ok`` holds
+    (≤ ``BROADCAST_MAX_BYTES``).
 
     Returns ``(node, label)`` after ``rounds`` rounds.
     """

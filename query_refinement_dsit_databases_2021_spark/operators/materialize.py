@@ -10,12 +10,12 @@ the round-9 verdict flagged two scale hazards this module closes:
    lineage to recompute them on executor loss. For node-sized frames
    that is the right trade everywhere; for EDGE-sized invariants at
    cluster scale the operator should be able to use a reliable
-   ``checkpoint()`` (survives executor loss) or ``persist(DISK_ONLY)``
-   instead. :func:`materialize` is the one switch point: the mode is
-   read from the ``spark.qr.materialize`` conf (``local`` default —
-   the only mode that makes sense in local mode, where there is no
+   ``checkpoint()`` (survives executor loss) instead.
+   :func:`materialize` is the one switch point: the mode is read from
+   the ``spark.qr.materialize`` conf (``local`` default — the only
+   mode that makes sense in local mode, where there is no
    executor-loss failure domain; ``reliable`` for clusters with a
-   checkpoint dir; ``disk`` for persist(DISK_ONLY)-based truncation).
+   checkpoint dir).
 
 2. Broadcast bounds were COUNT-based (``*_MAX_NODES = 10M``) while the
    broadcast frames have different row widths (BFS frontier rows are
@@ -90,8 +90,6 @@ def materialize(
     df: DataFrame,
     partition_by: tuple[str, ...] | None = None,
     eager: bool = True,
-    dedup: bool = False,
-    preserve_partitioning: bool = False,
 ) -> DataFrame:
     """Cut ``df``'s lineage and return a frame backed by materialized
     blocks — the engine-wide truncation primitive for loop invariants
@@ -106,12 +104,10 @@ def materialize(
       dir (must be set — fail loudly otherwise): the 100 TB setting
       for edge-sized invariants, per the executor-loss rule in
       :func:`dedup.neardup_components`'s docstring.
-    - ``disk``: ``persist(StorageLevel.DISK_ONLY)`` + an eager
-      materializing action. Lineage is kept (recompute on loss) while
-      the plan is truncated at analysis time via the CacheManager.
-      NOTE: cache lifetime is then the caller's to manage; loops that
-      re-materialize every round should prefer the checkpoint modes,
-      so ``disk`` is offered for invariants only.
+
+    Both modes leave block lifetime to the ContextCleaner, so loops
+    that re-materialize every round hold no cache the caller must
+    release.
 
     ``partition_by``: hash-partition on these keys before
     materializing AND preserve that partitioning into the
@@ -120,17 +116,6 @@ def materialize(
     identical). Downstream joins/groupBys keyed on a prefix of
     ``partition_by`` then skip their Exchange.
 
-    ``dedup=True`` (only with ``partition_by``) dropDuplicates AFTER
-    the repartition: rows equal on all columns share every partition
-    key, so the dedup aggregate runs exchange-free on the repartition's
-    clustering — ONE exchange replaces the distinct-then-repartition
-    pair the edge-canonicalization call sites would otherwise pay.
-
-    ``preserve_partitioning=True`` (without ``partition_by``): ``df``'s
-    own plan already ends in the partitioning the caller wants kept
-    (e.g. a join on the key) — materialize under the AQE toggle without
-    adding any repartition.
-
     ``eager=False`` defers materialization to the first action that
     consumes the frame — a convergence loop's probe aggregate then
     materializes the round's state in the SAME job instead of paying
@@ -138,9 +123,9 @@ def materialize(
     """
     spark = df.sparkSession
     mode = (spark.conf.get(MATERIALIZE_MODE_CONF, "local") or "local").lower()
-    if mode not in ("local", "reliable", "disk"):
+    if mode not in ("local", "reliable"):
         raise ValueError(
-            f"{MATERIALIZE_MODE_CONF} must be local|reliable|disk, got {mode!r}"
+            f"{MATERIALIZE_MODE_CONF} must be local|reliable, got {mode!r}"
         )
 
     def _ckpt(frame: DataFrame) -> DataFrame:
@@ -151,22 +136,12 @@ def materialize(
                     "SparkContext.setCheckpointDir"
                 )
             return frame.checkpoint(eager=eager)
-        if mode == "disk":
-            from pyspark import StorageLevel
-
-            frame = frame.persist(StorageLevel.DISK_ONLY)
-            if eager:
-                frame.count()
-            return frame
         return frame.localCheckpoint(eager=eager)
 
-    if not partition_by and not preserve_partitioning:
+    if not partition_by:
         return _ckpt(df)
-    if partition_by:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        df = df.repartition(n, *partition_by)
-        if dedup:
-            df = df.dropDuplicates()
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    df = df.repartition(n, *partition_by)
     aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:

@@ -3,13 +3,14 @@
 The reference's extension point is a name-registered family of
 per-window scalar functions ``f(series, x, lx, args) -> float``
 (reference:src/client.py:160, reference:src/server.py:960-1016). Here
-each measure is a *builder of native Column expressions* over one of
+each measure is a *builder of native Spark expressions* over one of
 two physical encodings of the series segment (see
 ``operators/candidates.py``):
 
 - **window strategy** ("W"): per-``lx`` sliding frames over the
-  time-ordered segment — O(N·Σ frame) work, best when the offset
-  domain is small (all committed reference queries: ≤ 46 values).
+  time-ordered segment, written as SQL text — O(N·Σ frame) work, best
+  when the offset domain is small (all committed reference queries:
+  ≤ 46 values).
 - **sparse strategy** ("S"): prefix sums + doubling max tables
   (sparse table / RMQ), then per-candidate equi-join lookups —
   O(N log L + |candidates|) work, the 100 TB path for large domains.
@@ -119,20 +120,15 @@ class WindowFrame:
     rangeBetween(lo, hi) relative to the current row's time_id."""
 
     name: str
-    agg: str  # 'avg' | 'max'
+    agg: str  # 'avg' | 'max' | 'min' | 'sum'
     lo: int
     hi: int
 
-    def column(self, window_spec) -> Column:
-        fn = {"avg": F.avg, "max": F.max, "min": F.min, "sum": F.sum}[self.agg]
-        return fn("y").over(window_spec.rangeBetween(self.lo, self.hi))
-
     def sql(self) -> str:
-        """SQL-text twin of :meth:`column` over the canonical
-        ``(wpid, time_id)`` window (r09: strategy W builds dozens of
-        frame columns per query; one ``selectExpr`` parse replaces
-        ~8 py4j round trips per frame of driver time — the resolved
-        window expression is identical)."""
+        """The frame as SQL text over the canonical ``(wpid, time_id)``
+        window (r09: strategy W builds dozens of frame columns per
+        query; one ``selectExpr`` parse replaces ~8 py4j round trips
+        per frame of driver time)."""
 
         def bound(v: int) -> str:
             if v == 0:
@@ -148,14 +144,18 @@ class WindowFrame:
 class MeasureDef:
     """Base class; subclasses implement the physical strategies.
 
-    ``native`` measures implement W (window frames) and S (sparse
-    table) as Column builders — the JVM-side fast paths. Every measure
-    additionally implements ``py_kernel``, the Arrow-batched escape
-    hatch (strategy P, ``candidates._build_pandas``): the reference's
-    own kernel contract ``f(series, x, lx, args) -> float``
-    (reference:src/server.py:960-1016) evaluated per candidate over a
-    halo-complete NumPy block. Non-native measures (``native=False``)
-    run only under strategy P; the planner auto-selects it."""
+    ``native`` measures implement the two JVM-side fast paths:
+    strategy W as SQL text (``w_frames`` names the base window frames,
+    ``w_expr_sql`` combines them into the measure at one offset) and
+    strategy S as a Column builder (``s_expr`` over the sparse-table
+    lookups of a :class:`SparseCtx`). Every measure implements
+    ``w_reach``, the halo its window and kernel accesses need, and
+    ``py_kernel``, the Arrow-batched escape hatch (strategy P,
+    ``candidates._build_pandas``): the reference's own kernel contract
+    ``f(series, x, lx, args) -> float`` (reference:src/server.py:960-1016)
+    evaluated per candidate over a halo-complete NumPy block.
+    Non-native measures (``native=False``) run only under strategy P;
+    the planner auto-selects it."""
 
     name: str = ""
     n_args: int = 0
@@ -165,14 +165,10 @@ class MeasureDef:
     def w_frames(self, lx: int, args: tuple) -> list[WindowFrame]:
         raise NotImplementedError
 
-    def w_expr(self, lx: int, args: tuple) -> Column:
+    def w_expr_sql(self, lx: int, args: tuple) -> str:
+        """The measure at offset ``lx`` as SQL text over the frame
+        columns :meth:`w_frames` names (see WindowFrame.sql)."""
         raise NotImplementedError
-
-    def w_expr_sql(self, lx: int, args: tuple) -> str | None:
-        """SQL-text twin of :meth:`w_expr` (r09 fast path; see
-        WindowFrame.sql). ``None`` -> the builder falls back to the
-        Column form for this measure."""
-        return None
 
     def w_reach(self, l1: int, args: tuple) -> tuple[int, int]:
         """(forward, backward) halo row reach required at partition
@@ -218,9 +214,6 @@ class AvgAmp(MeasureDef):
     def w_frames(self, lx, args):
         return [WindowFrame(f"wavg_{lx}", "avg", 0, lx)]
 
-    def w_expr(self, lx, args):
-        return F.col(f"wavg_{lx}")
-
     def w_expr_sql(self, lx, args):
         return f"wavg_{lx}"
 
@@ -245,10 +238,6 @@ class MaxAmpExcessRight(MeasureDef):
     def w_frames(self, lx, args):
         w = args[0]
         return [_wmax_frame(lx), WindowFrame(f"rmax_{lx}_{w}", "max", lx, lx + w)]
-
-    def w_expr(self, lx, args):
-        w = args[0]
-        return F.col(f"wmax_{lx}") - F.col(f"rmax_{lx}_{w}")
 
     def w_expr_sql(self, lx, args):
         return f"wmax_{lx} - rmax_{lx}_{args[0]}"
@@ -283,10 +272,6 @@ class MaxAmpExcessLeft(MeasureDef):
     def w_frames(self, lx, args):
         w = args[0]
         return [_wmax_frame(lx), WindowFrame(f"lmax_{w}", "max", -w, 0)]
-
-    def w_expr(self, lx, args):
-        w = args[0]
-        return F.col(f"wmax_{lx}") - F.col(f"lmax_{w}")
 
     def w_expr_sql(self, lx, args):
         return f"wmax_{lx} - lmax_{args[0]}"
@@ -326,9 +311,6 @@ class SumAmp(MeasureDef):
     def w_frames(self, lx, args):
         return [WindowFrame(f"wsum_{lx}", "sum", 0, lx)]
 
-    def w_expr(self, lx, args):
-        return F.col(f"wsum_{lx}")
-
     def w_expr_sql(self, lx, args):
         return f"wsum_{lx}"
 
@@ -353,9 +335,6 @@ class MinAmp(MeasureDef):
 
     def w_frames(self, lx, args):
         return [WindowFrame(f"wmin_{lx}", "min", 0, lx)]
-
-    def w_expr(self, lx, args):
-        return F.col(f"wmin_{lx}")
 
     def w_expr_sql(self, lx, args):
         return f"wmin_{lx}"
@@ -382,9 +361,6 @@ class RangeAmp(MeasureDef):
 
     def w_frames(self, lx, args):
         return [_wmax_frame(lx), WindowFrame(f"wmin_{lx}", "min", 0, lx)]
-
-    def w_expr(self, lx, args):
-        return F.col(f"wmax_{lx}") - F.col(f"wmin_{lx}")
 
     def w_expr_sql(self, lx, args):
         return f"wmax_{lx} - wmin_{lx}"
@@ -479,7 +455,9 @@ REGISTRY: dict[str, MeasureDef] = {
 def register_measure(measure: MeasureDef) -> None:
     """Extension hook for user-defined interval measures (the Spark
     analogue of adding a kernel to reference:src/server.py:960-1016 and
-    its name to reference:src/client.py:160). Native measures plug
-    into the W/S Column builders; ``PythonKernelMeasure`` instances
-    run via the Arrow-batched strategy P."""
+    its name to reference:src/client.py:160). A native measure
+    provides ``w_frames`` + ``w_expr_sql`` (strategy W, SQL text),
+    ``s_expr`` (strategy S, a Column over sparse-table lookups),
+    ``w_reach`` and ``py_kernel``; ``PythonKernelMeasure`` instances
+    (``native=False``) run only via the Arrow-batched strategy P."""
     REGISTRY[measure.name] = measure

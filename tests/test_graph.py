@@ -135,6 +135,41 @@ def test_bfs_levels_path_graph_and_unreached(spark):
     assert got3 == {1: 0, 2: 1, 3: 2}
 
 
+def test_bfs_keyed_sources_match_single_source_runs(spark):
+    """A keyed ``sources`` frame runs one BFS per key in one loop; each
+    key's distances must equal the single-source form from that seed."""
+    from query_refinement_dsit_databases_2021_spark.operators.graph import (
+        bfs_distances,
+    )
+
+    # a cycle 1-2-3-4-5-6-1 with a tail 6-7-8 and a separate edge 9-10:
+    # the seeds sit on opposite sides of the cycle, and 9/10 stay
+    # unreached from both
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 1), (6, 7), (7, 8),
+         (9, 10)],
+        "src long, dst long",
+    )
+    seeds = (1, 4)
+    keyed = spark.createDataFrame(
+        [(s, s) for s in seeds], "seed long, node long"
+    )
+    multi = {}
+    for r in bfs_distances(edges, keyed).collect():
+        multi.setdefault(r["seed"], {})[r["node"]] = r["dist"]
+    single = {
+        s: {
+            r["node"]: r["dist"]
+            for r in bfs_distances(
+                edges, spark.createDataFrame([(s,)], "node long")
+            ).collect()
+        }
+        for s in seeds
+    }
+    assert multi == single
+    assert single[1] == {1: 0, 2: 1, 3: 2, 4: 3, 5: 2, 6: 1, 7: 2, 8: 3}
+
+
 def test_link_prediction_hand_graph(spark):
     from query_refinement_dsit_databases_2021_spark.operators.graph import (
         link_prediction,

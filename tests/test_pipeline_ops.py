@@ -46,24 +46,19 @@ def test_jaccard_posting_cap_bounds_join(docs, spark):
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in dedup.ngram_jaccard_pairs(df, threshold=0.0).collect()
     }
-    by_strategy = {}
-    for strat in ("window", "join"):
-        capped = {
-            (r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in dedup.ngram_jaccard_pairs(
-                df, threshold=0.0, max_posting=2, cap_strategy=strat
-            ).collect()
-        }
-        by_strategy[strat] = capped
-        assert set(capped) <= set(full)
-        for pair, j in capped.items():
-            assert j <= full[pair] + 1e-9
-        # the genuine near-dup pair survives the cap (its distinctive
-        # shingles are rare), while stop-shingle-only pairs drop out
-        assert (1, 10) in capped
-        assert len(capped) < len(full)
-    # both cap strategies compute the same document frequencies
-    assert by_strategy["window"] == by_strategy["join"]
+    capped = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in dedup.ngram_jaccard_pairs(
+            df, threshold=0.0, max_posting=2
+        ).collect()
+    }
+    assert set(capped) <= set(full)
+    for pair, j in capped.items():
+        assert j <= full[pair] + 1e-9
+    # the genuine near-dup pair survives the cap (its distinctive
+    # shingles are rare), while stop-shingle-only pairs drop out
+    assert (1, 10) in capped
+    assert len(capped) < len(full)
 
 
 def test_shingles_short_doc_empty(docs):
